@@ -54,16 +54,20 @@ object Tables {
     */
   def withMicroBatchConf[T](spark: SparkSession)(body: => T): T = {
     val conf = spark.conf
-    val aqe0 = conf.get("spark.sql.adaptive.enabled", "true")
-    val sp0 = conf.get("spark.sql.shuffle.partitions", "200")
+    // only explicitly set keys: `getOption` also reports a registered
+    // key's default, and restoring that would pin a value the session
+    // never set
+    val explicit = conf.getAll
+    val saved = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+      .map(k => k -> explicit.get(k))
     conf.set("spark.sql.adaptive.enabled",
       conf.get("spark.graft.microbatch.aqe", "false"))
     conf.set("spark.sql.shuffle.partitions",
       conf.get("spark.graft.microbatch.partitions", "1"))
     try body
-    finally {
-      conf.set("spark.sql.adaptive.enabled", aqe0)
-      conf.set("spark.sql.shuffle.partitions", sp0)
+    finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
     }
   }
 

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{BoundedTopK, Sketches}
-import graft.functions.VectorExpressions.{arrayDot, l2Norm}
+import graft.functions.VectorExpressions
+import graft.functions.VectorExpressions.{adcSum, arrayDot, hammingWords, l2Norm,
+  nearestCell, nearestCells, sqDist}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -59,8 +61,7 @@ object SimilaritySearch {
 
   /** Normalize input: (id, e double[], nrm). */
   private def prep(df: DataFrame, vecCol: String, idCol: String): DataFrame =
-    df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("e"))
+    df.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("e"))
       .withColumn("nrm", norm(col("e")))
 
   /** (qid, nid, sim) candidates → (qid, nid, sim, rnk) top-k per query,
@@ -131,28 +132,22 @@ object SimilaritySearch {
     * binary-quantization code production vector stores ship as their
     * cheapest tier (32× smaller than float32, 64× vs float64): bit b
     * of word w is 1 iff coordinate w·32+b is strictly positive. Packing
-    * sums DISTINCT powers of two below 2³² as plain longs (no carries,
-    * no sign-bit wrap — both engines agree exactly), so the whole
-    * encoding replays in the oracle.
+    * sets DISTINCT bits below 2³² of plain longs (no carries, no
+    * sign-bit wrap — both engines agree exactly), so the whole encoding
+    * replays in the oracle (a per-bit `CASE WHEN` sum there).
+    *
+    * Executed by the `binary_sign_words` kernel, one loop per row. The
+    * former `dim`-term `CASE WHEN element_at(…) > 0.0` sum computed the
+    * same words but failed twice on the hot path, both measured on the
+    * binary audit's Hamming scan: whole-stage codegen deferred the
+    * stream-side projection into the broadcast-nested-loop join's pair
+    * loop, so the 64-term sum ran once per (query, corpus) pair; and it
+    * pushed the generated `processNext` past the JVM's 8,000-byte
+    * huge-method limit, so the JIT never compiled it and the loop ran
+    * interpreted.
     */
-  def binarySignWords(vec: Column, dim: Int): Column = {
-    require(dim >= 1 && dim <= 4096, s"dim $dim out of range (1..4096)")
-    val words = (dim + 31) / 32
-    array((0 until words).map { w =>
-      (0 until math.min(32, dim - w * 32)).map { b =>
-        when(element_at(vec, w * 32 + b + 1).cast("double") > 0.0,
-          lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    }: _*)
-  }
-
-  /** Hamming distance between two packed sign codes (bit_count of the
-    * per-word XOR, summed — codegen'd built-ins end to end).
-    */
-  private def hammingWords(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b,
-      (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
-      lit(0L), (acc, x) => acc + x)
+  def binarySignWords(vec: Column, dim: Int): Column =
+    VectorExpressions.binarySignWords(vec, dim)
 
   /** Binary (Hamming) top-k over sign codes — the 32×-compressed flat
     * scan: queries broadcast, the corpus's packed words never shuffle,
@@ -1213,11 +1208,9 @@ object SimilaritySearch {
           sort_array(collect_list(struct(col("__s"), col("cents")))),
           x => x.getField("cents")).as("centsBys"))
       val assigned = sub.crossJoin(broadcast(byS))
-        .withColumn("cents", element_at(col("centsBys"), col("__s") + 1))
-        .withColumn("m", array_min(transform(col("cents"),
-          c2 => struct(cd2(col("e"), c2).as("d2"),
-            c2.getField("cell").as("cell")))))
-        .select(col("__s"), col("id"), col("e"), col("m.cell").as("cell"))
+        .select(col("__s"), col("id"), col("e"),
+          nearestCell(element_at(col("centsBys"), col("__s") + 1), col("e"))
+            .as("cell"))
       val picked = assigned
         .withColumn("hk", Sketches.splitmixLong(col("id")).cast("double"))
         .groupBy(col("__s"), col("cell"))
@@ -1242,52 +1235,32 @@ object SimilaritySearch {
       merged.filter(col("__s") === s).select(col("cell"), col("ce")))
   }
 
-  /** d² between the row vector `e` and one (cell, ce) struct — the exact
-    * fold every former crossJoin site used (zip_with square diffs,
-    * left-to-right sum), so scores are bit-identical.
-    */
-  private def cd2(e: Column, c: Column): Column =
-    aggregate(zip_with(e, c.getField("ce"), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x)
-
   /** The query's `nProbe` nearest cells as a (d2 asc, cell asc) sorted
-    * struct array — row-local over the broadcast centroid array;
-    * replaces the collect_list/groupBy probe shuffle.
+    * struct array — row-local over the broadcast centroid array (the
+    * `nearest_cells` kernel); replaces the collect_list/groupBy probe
+    * shuffle.
     */
   private def nearestCellsExpr(e: Column, nProbe: Int,
       excludeCell: Option[Column] = None): Column = {
     val cands = excludeCell
       .map(x => filter(col("cents"), c => c.getField("cell") =!= x))
       .getOrElse(col("cents"))
-    slice(sort_array(transform(cands,
-      c => struct(cd2(e, c).as("d2"), c.getField("cell").as("cell")))),
-      1, nProbe)
+    nearestCells(cands, e, nProbe)
   }
 
   /** Assign each corpus vector to its nearest centroid — row-local
-    * argmin over the broadcast centroid array: `array_min` over
-    * struct(d2, cell) is EXACTLY the former groupBy `min(struct(d2,
-    * cell))` (d2 asc, cell-asc ties), with zero exchanges — the corpus
-    * stays in place, nothing |corpus|·nCells-sized is ever materialized
-    * or shuffled.
+    * argmin over the broadcast centroid array (the `nearest_cell`
+    * kernel: least (d2, cell), EXACTLY the former groupBy `min(struct(d2,
+    * cell))`), with zero exchanges — the corpus stays in place, nothing
+    * |corpus|·nCells-sized is ever materialized or shuffled.
     */
   def assignCells(prepped: DataFrame, centroids: DataFrame): DataFrame =
     prepped.crossJoin(broadcast(centroidArray(centroids)))
-      .withColumn("m", array_min(transform(col("cents"),
-        c => struct(cd2(col("e"), c).as("d2"), c.getField("cell").as("cell")))))
-      .select(col("id"), col("m.cell").as("cell"), col("e"), col("nrm"))
-
-  /** The nearest cell of `e` over a given centroid-array column — the
-    * [[assignCells]] argmin as a bare expression, for the one-pass
-    * encoders below.
-    */
-  private def argminCell(cents: Column, e: Column): Column =
-    array_min(transform(cents,
-      c => struct(cd2(e, c).as("d2"), c.getField("cell").as("cell"))))
-      .getField("cell")
+      .select(col("id"), nearestCell(col("cents"), col("e")).as("cell"),
+        col("e"), col("nrm"))
 
   /** Encode a frame carrying a vector column `vc` as PQ codes in ONE
-    * row-local pass: every subspace's code is the [[assignCells]] argmin
+    * row-local pass: every subspace's code is the `nearest_cell` argmin
     * over that subspace's broadcast codebook array applied to the same
     * per-row slice the per-subspace assign used — no per-subspace
     * passes, no m-way join of corpus-sized code frames (formerly m
@@ -1311,9 +1284,8 @@ object SimilaritySearch {
         lit(s" must divide into $m subspaces"))))
     withArrs.select(keep :+
       array((0 until m).map { s =>
-        argminCell(col(s"__cents$s"),
-          transform(slice(vc, lit(s) * subDim + lit(1), subDim),
-            x => x.cast("double")))
+        nearestCell(col(s"__cents$s"),
+          slice(vc, lit(s) * subDim + lit(1), subDim).cast("array<double>"))
       }: _*).as("codes"): _*)
   }
 
@@ -1374,7 +1346,7 @@ object SimilaritySearch {
         centroidArray(coarse).select(col("cents").as("__cents_coarse"))))
     val codes = encodeCodes(prepped, col("e"), perSubCents,
       keep = Seq(col("id").as("nid"),
-        argminCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
+        nearestCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
 
     val dtabs = pqDistanceTables(queries, vecCol, idCol, perSubCents)
     ivfPqScoreModel(queries, vecCol, idCol, coarse, dtabs, codes, nProbe, m)
@@ -1402,9 +1374,7 @@ object SimilaritySearch {
       .join(codes, Seq("ivf_cell"))
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-          (acc, s) => acc + element_at(element_at(col("dtabs"), s + 1),
-            (element_at(col("codes"), s + 1) + 1).cast("int"))).as("adist"))
+        adcSum(col("dtabs"), col("codes"), m).as("adist"))
   }
 
   /** Per-query PQ distance tables against given per-subspace codebooks:
@@ -1425,16 +1395,15 @@ object SimilaritySearch {
       .otherwise(raise_error(concat(
         lit("vector dim "), sz.cast("string"), lit(s" must divide into $m subspaces"))))
     val q = queries.select(col(idCol).as("qid") +:
-      (0 until m).map(s => transform(
-        slice(col(vecCol), lit(s) * subDim + lit(1), subDim),
-        x => x.cast("double")).as(s"sube$s")): _*)
+      (0 until m).map(s =>
+        slice(col(vecCol), lit(s) * subDim + lit(1), subDim)
+          .cast("array<double>").as(s"sube$s")): _*)
     (0 until m).foldLeft(q) { (df, s) =>
       df.crossJoin(broadcast(
         centroidArray(subCents(s)).select(col("cents").as(s"cents$s"))))
     }.select(col("qid"),
       array((0 until m).map(s => transform(col(s"cents$s"),
-        c => aggregate(zip_with(col(s"sube$s"), c.getField("ce"),
-          (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))): _*)
+        c => sqDist(col(s"sube$s"), c.getField("ce")))): _*)
         .as("dtabs"))
   }
 
@@ -1466,7 +1435,7 @@ object SimilaritySearch {
         centroidArray(coarse).select(col("cents").as("__cents_coarse"))))
     encodeCodes(prepped, col("e"), perSubCents,
       keep = Seq(col("id").as("nid"),
-        argminCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
+        nearestCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
       .write.format("kv").option("path", s"$path/codes")
       .mode("overwrite").save()
     val spark = corpus.sparkSession
@@ -1560,7 +1529,7 @@ object SimilaritySearch {
         centroidArray(table("coarse")).select(col("cents").as("__cents_coarse"))))
     encodeCodes(prepped, col("e"), subCents,
       keep = Seq(col("id").as("nid"),
-        argminCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
+        nearestCell(col("__cents_coarse"), col("e")).as("ivf_cell")))
       .write.format("kv").option("path", s"$path/codes").mode("append").save()
   }
 
@@ -1751,9 +1720,7 @@ object SimilaritySearch {
     // ADC: m-term lookup sum, folded in subspace order
     val scored = broadcast(dtabs).join(codes, col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-          (acc, s) => acc + element_at(element_at(col("dtabs"), s + 1),
-            (element_at(col("codes"), s + 1) + 1).cast("int"))).as("adist"))
+        adcSum(col("dtabs"), col("codes"), m).as("adist"))
     scored.groupBy(col("qid"))
       .agg(BoundedTopK.topK(
         struct((-col("adist")).as("negd"), col("nid").as("nid")), k).as("top"))
@@ -1852,7 +1819,7 @@ object SimilaritySearch {
   private def prepAttr(df: DataFrame, vecCol: String, idCol: String,
       attrCol: String): DataFrame =
     df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => x.cast("double")).as("e"),
+      col(vecCol).cast("array<double>").as("e"),
       col(attrCol).cast("long").as("attr"))
       .withColumn("nrm", norm(col("e")))
 
@@ -2140,13 +2107,25 @@ object SimilaritySearch {
     * only PQ's fixed subspace split sees a different, variance-mixed
     * basis, which is precisely the OPQ objective. Requires d a power of
     * two (Sylvester Hadamard), checked per row. Row-local O(d²) map —
-    * no shuffle; a 100 TB deployment would fold the same matrix into a
-    * codegen'd FWHT Expression (O(d log d)), the semantics pinned here.
+    * no shuffle.
+    *
+    * This naive fold is the semantics reference (q_ann_opq's oracle
+    * replays it term by term); it is NOT a fast path. `transform` and
+    * `aggregate` are `CodegenFallback`: the d×d lambda fold runs
+    * interpreted per row and drags its whole projection out of
+    * whole-stage codegen. Where such a projection does stay inside a
+    * generated stage that feeds a broadcast-nested-loop join, codegen
+    * defers it into the pair loop, re-evaluating it once per pair, and
+    * large inlined expression trees push the generated method past the
+    * JVM's 8,000-byte huge-method limit, so the JIT leaves it
+    * interpreted (both measured on the binary tier's sign packing).
+    * [[opqRotateFwht]] is the same rotation as one generated-code
+    * kernel call, O(d log d).
     */
   def opqRotate(vec: Column, d: Int): Column = {
     require(d > 0 && (d & (d - 1)) == 0, s"opqRotate: dim $d is not a power of two")
-    // plan-time sign constants (splitmix64 parity) — the hot loop stays
-    // literal arithmetic inside codegen, no per-element hashing
+    // plan-time sign constants (splitmix64 parity) — no per-element
+    // hashing inside the fold
     val signs = opqSigns(d)
     val signArr = array(signs.map(lit(_)): _*)
     val checked = when(size(vec) === d, vec)
@@ -2252,7 +2231,7 @@ object SimilaritySearch {
     require(m >= 1 && dim % m == 0,
       s"dim $dim must split evenly into m=$m subspaces")
     val q = corpus
-      .select(posexplode(transform(col(vecCol), x => x.cast("double")))
+      .select(posexplode(col(vecCol).cast("array<double>"))
         .as(Seq("pos", "v")))
       .groupBy(col("pos"))
       .agg(sum(floor(col("v") * col("v") * lit(1e6) + lit(0.5))
@@ -2484,7 +2463,7 @@ object SimilaritySearch {
     require(dim >= 1 && dim <= 4096, s"dim $dim out of range (1..4096)")
     require(iters >= 1 && iters <= 16, s"iters must be in [1, 16], got $iters")
     val rows = corpus.select(
-      transform(col(vecCol), x => x.cast("double")).as("e"))
+      col(vecCol).cast("array<double>").as("e"))
     var v: Seq[Long] = Seq.fill(dim)(1000000L)
     for (_ <- 1 to iters) {
       // two silent-overflow hazards guarded here, both places the Scala
@@ -2827,8 +2806,7 @@ object SimilaritySearch {
           maxTrainPerCell), k)),
         () => hits(pq.crossJoin(pc)
           .where(col("qid") =!= col("id"))
-          .withColumn("d2", aggregate(zip_with(col("qe"), col("e"),
-            (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
+          .withColumn("d2", sqDist(col("qe"), col("e")))
           .groupBy(col("qid"))
           .agg(graft.functions.BoundedTopK.topK(
             struct((lit(0.0) - col("d2")).as("negd"), col("id").as("nid")),
@@ -3266,8 +3244,7 @@ object SimilaritySearch {
     // ---- per-cell entry points (nearest the centroid; score is -d2 so
     // the shared heap's score-desc order means d2 asc, id asc) ----
     val seeds = assigned.join(broadcast(cents), Seq("cell"))
-      .withColumn("d2", aggregate(zip_with(col("e"), col("ce"),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
+      .withColumn("d2", sqDist(col("e"), col("ce")))
       .groupBy(col("cell"))
       .agg(graft.functions.BoundedTopK.topK(
         struct((lit(0.0) - col("d2")).as("nd2"), col("id")), seedsPerCell).as("top"))
@@ -3924,8 +3901,7 @@ object SimilaritySearch {
     cents.select(col("cell").as("src"), col("ce").as("se"))
       .crossJoin(broadcast(pool))
       .where(col("src") =!= col("dst"))
-      .withColumn("d2", aggregate(zip_with(col("se"), col("de"),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
+      .withColumn("d2", sqDist(col("se"), col("de")))
       .groupBy(col("src"))
       .agg(graft.functions.BoundedTopK.topK(
         struct((lit(0.0) - col("d2")).as("nd2"), col("dst")),
@@ -3948,8 +3924,7 @@ object SimilaritySearch {
     def score(cand: DataFrame): DataFrame = cand
       .join(broadcast(cents), Seq("cell"))
       .select(col("qid"), col("qe"), col("qn"), col("cell"),
-        aggregate(zip_with(col("qe"), col("ce"),
-          (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
+        sqDist(col("qe"), col("ce"))
           .as("d2"))
     def topBeam(scored: DataFrame): DataFrame =
       scored.groupBy(col("qid"))
@@ -4283,8 +4258,8 @@ object SimilaritySearch {
     // pairs are unique — the ce field never enters the comparison)
     prepped.crossJoin(broadcast(centroidArray(coarse)))
       .withColumn("m", array_min(transform(col("cents"),
-        c => struct(cd2(col("e"), c).as("d2"), c.getField("cell").as("cell"),
-          c.getField("ce").as("ce")))))
+        c => struct(sqDist(col("e"), c.getField("ce")).as("d2"),
+          c.getField("cell").as("cell"), c.getField("ce").as("ce")))))
       .select(col("id"), col("m.cell").as("ivf_cell"),
         zip_with(col("e"), col("m.ce"), (x, y) => x - y).as("rvec"))
 
@@ -4307,7 +4282,7 @@ object SimilaritySearch {
       .crossJoin(broadcast(centroidArray(coarse)))
       .select(col("id").as("qid"),
         explode(slice(sort_array(transform(col("cents"),
-          c => struct(cd2(col("e"), c).as("d2"),
+          c => struct(sqDist(col("e"), c.getField("ce")).as("d2"),
             c.getField("cell").as("cell"),
             zip_with(col("e"), c.getField("ce"), (x, y) => x - y)
               .as("rq")))),
@@ -4324,17 +4299,13 @@ object SimilaritySearch {
         centroidArray(subCents(s)).select(col("cents").as(s"cents$s"))))
     }.select(col("qid"), col("ivf_cell"),
       array((0 until m).map(s => transform(col(s"cents$s"),
-        c => aggregate(zip_with(
-          slice(col("rq"), lit(s) * subDim + lit(1), subDim),
-          c.getField("ce"), (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, x) => acc + x))): _*).as("dtabs"))
+        c => sqDist(slice(col("rq"), lit(s) * subDim + lit(1), subDim),
+          c.getField("ce")))): _*).as("dtabs"))
     broadcast(dtabs)
       .join(codes, Seq("ivf_cell"))
       .where(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
-        aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-          (acc, s) => acc + element_at(element_at(col("dtabs"), s + 1),
-            (element_at(col("codes"), s + 1) + 1).cast("int"))).as("adist"))
+        adcSum(col("dtabs"), col("codes"), m).as("adist"))
   }
 
   /** Persist a residual IVF-PQ index — [[buildIvfPqIndex]]'s layout for
@@ -4505,8 +4476,7 @@ object SimilaritySearch {
     val exact = broadcast(prep(queries, vecCol, idCol)
         .select(col("id").as("qid"), col("e").as("qe")))
       .join(pc, col("qid") =!= col("id"))
-      .withColumn("d2", aggregate(zip_with(col("qe"), col("e"),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
+      .withColumn("d2", sqDist(col("qe"), col("e")))
       .groupBy(col("qid"))
       .agg(graft.functions.BoundedTopK.topK(
         struct((lit(0.0) - col("d2")).as("negd"), col("id").as("nid")),
@@ -4665,8 +4635,7 @@ object SimilaritySearch {
     val exact = broadcast(prep(queries, vecCol, idCol)
         .select(col("id").as("qid"), col("e").as("qe")))
       .join(pc, col("qid") =!= col("id"))
-      .withColumn("d2", aggregate(zip_with(col("qe"), col("e"),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
+      .withColumn("d2", sqDist(col("qe"), col("e")))
       .groupBy(col("qid"))
       .agg(graft.functions.BoundedTopK.topK(
         struct((lit(0.0) - col("d2")).as("negd"), col("id").as("nid")),

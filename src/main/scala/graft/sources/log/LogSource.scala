@@ -486,7 +486,7 @@ class LogMicroBatchStream(path: String, schema: StructType, raw: Boolean,
     // begin at offset 0 — LoghubSource.scala:130-161 semantics.
     val status = LogSource.shardFileStatus(path)
     val targetBytes = LogSource.targetSplitBytes(options)
-    e.keys.toSeq.sorted.flatMap { shard =>
+    val parts = e.keys.toSeq.sorted.flatMap { shard =>
       val from = s.getOrElse(shard, 0L)
       val to = e(shard)
       status.get(shard) match {
@@ -494,8 +494,22 @@ class LogMicroBatchStream(path: String, schema: StructType, raw: Boolean,
           LogSource.planShardPartitions(f, len, mt, shard, from, to, targetBytes)
         case _ => Nil
       }
-    }.toArray
+    }
+    // keep the cursors still parked (an earlier batch's reader whose shard
+    // has not moved on since) and add this batch's end cursors; consumed
+    // and LRU-evicted ones drop out, so this stays within the cache bound
+    // plus one batch however many shards the stream ever reads
+    tailCursors = tailCursors.intersect(LogTailCache.parkedCursors) ++
+      parts.map(p => LogTailCache.Cursor(p.file, p.fileLen, p.fileMtime, p.endRow))
+    parts.toArray
   }
+
+  /** The positions this stream's batches may have left a reader parked
+    * at — the readers [[stop]] releases.
+    */
+  @volatile private var tailCursors = Set.empty[LogTailCache.Cursor]
+
+  private[graft] def trackedCursors: Set[LogTailCache.Cursor] = tailCursors
 
   override def createReaderFactory(): PartitionReaderFactory =
     new LogReaderFactory(schema, raw,
@@ -503,7 +517,16 @@ class LogMicroBatchStream(path: String, schema: StructType, raw: Boolean,
       avroCol = LogSource.avroValueColumn(options))
 
   override def commit(end: Offset): Unit = () // Spark's offset log is the source of truth
-  override def stop(): Unit = ()
+
+  /** Close the readers this stream's batches parked: a stopped stream's
+    * next slice never comes, so they would otherwise hold their file
+    * handles until LRU eviction. Only readers at this stream's own
+    * cursors (file version and row position) are closed; another stream
+    * parked at the very same cursor loses its reader too and reopens.
+    * The cache is JVM-local, so this releases the driver's (local mode:
+    * the only) parked readers; executor JVMs still rely on the LRU bound.
+    */
+  override def stop(): Unit = LogTailCache.release(tailCursors)
 }
 
 /** Executor-local cache of POSITIONED shard readers — the local
@@ -552,6 +575,32 @@ object LogTailCache {
       Option(parked.remove(Key(file, len, mtime, schema, pos)))
         .map(_.asInstanceOf[Iterator[InternalRow] with AutoCloseable])
     }
+  }
+
+  /** Where a reader is parked: file version and row position, whatever
+    * its projection.
+    */
+  case class Cursor(file: String, len: Long, mtime: Long, pos: Long)
+  private def cursorOf(k: Key): Cursor = Cursor(k.file, k.len, k.mtime, k.pos)
+
+  /** Close and drop every reader parked at one of `cursors`. */
+  def release(cursors: Set[Cursor]): Unit = if (cursors.nonEmpty) {
+    val closing = parked.synchronized {
+      val it = parked.entrySet().iterator()
+      val out = Seq.newBuilder[AutoCloseable]
+      while (it.hasNext) {
+        val e = it.next()
+        if (cursors.contains(cursorOf(e.getKey))) { out += e.getValue; it.remove() }
+      }
+      out.result()
+    }
+    closing.foreach(c => scala.util.Try(c.close()))
+  }
+
+  /** The cursors that currently have a parked reader. */
+  def parkedCursors: Set[Cursor] = parked.synchronized {
+    import scala.jdk.CollectionConverters._
+    parked.keySet().asScala.map(cursorOf).toSet
   }
 
   def park(file: String, len: Long, mtime: Long, schema: String, pos: Long,

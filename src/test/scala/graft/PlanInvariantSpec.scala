@@ -264,4 +264,38 @@ class PlanInvariantSpec extends SparkSpec {
     assert(plan.contains("PushedFilters") && plan.contains("GreaterThan"),
       s"snapshot read lost pushdown:\n$plan")
   }
+
+  test("ANN scoring and encoding run as kernels: no HOF folds or CASE bit packing") {
+    // the hot vector math of the binary and OPQ/IVF-PQ tiers must stay in
+    // the generated-code kernels: an aggregate/zip_with fold is an
+    // interpreted lambda per element, and a CASE WHEN over element_at is
+    // the dim-term sign packing that codegen re-ran per join pair
+    val banned = Seq("aggregate(", "zip_with(")
+    val casePacking = """CASE WHEN \((cast\()?element_at\(""".r
+    val kernels = Map(
+      "q_ann_binary" -> Seq("binary_sign_words", "hamming_words"),
+      "q_ann_binary_refine" -> Seq("binary_sign_words", "hamming_words", "array_dot"),
+      "q_ann_opq_fwht" ->
+        Seq("fwht_rotate", "nearest_cell", "nearest_cells", "sq_dist", "adc_sum"))
+    for ((q, names) <- kernels) {
+      val plan = planOf(q)
+      val exprs = plan.collect { case p => p.expressions }.flatten
+        // model training, not scoring: the Lloyd mean over each cell's
+        // training sample (`mem`) is a per-cell fold, not a per-row one
+        .filterNot(_.references.exists(_.name == "mem"))
+        .map(_.toString)
+      for (e <- exprs) {
+        banned.foreach(b => assert(!e.contains(b), s"$q: `$b` in\n$e\n$plan"))
+        assert(casePacking.findFirstIn(e).isEmpty, s"$q: CASE bit packing in\n$e\n$plan")
+      }
+      val text = plan.toString
+      names.foreach(k => assert(text.contains(s"$k("), s"$q: no $k kernel in\n$plan"))
+      // every generated stage of the gate compiles: with the fallback off,
+      // generated Java that does not compile fails the run instead of
+      // silently evaluating interpreted
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      try SparkEntry.queries(q)(spark, dir).write.format("noop").mode("overwrite").save()
+      finally spark.conf.unset("spark.sql.codegen.fallback")
+    }
+  }
 }

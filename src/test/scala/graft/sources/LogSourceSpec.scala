@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.Files
 import graft.SparkSpec
+import graft.sources.log.{LogMicroBatchStream, LogOffsetV, LogTailCache}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -105,6 +106,65 @@ class LogSourceSpec extends SparkSpec {
     // parked at EOF must not be consulted) and sees every row
     assert(spark.read.format("log").option("path", dir).load()
       .count() == 1000)
+  }
+
+  test("stopping a rate-limited log stream closes the readers it parked") {
+    val dir = Files.createTempDirectory("logstop").toString
+    val ckpt = Files.createTempDirectory("logstopck").toString
+    writeShard(dir, "shard-a.parquet", 0, 2000)
+    def parkedHere: Set[String] =
+      LogTailCache.parkedCursors.map(_.file).filter(_.contains(dir))
+    val q = spark.readStream.format("log").option("path", dir)
+      .option("maxOffsetsPerTrigger", "13").load()
+      .writeStream.format("noop")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(200)).start()
+    try {
+      // between triggers the last batch's reader waits, parked at the
+      // next slice's first row
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (parkedHere.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(parkedHere.nonEmpty, "the drain never parked a reader")
+    } finally q.stop()
+    assert(parkedHere.isEmpty, s"parked readers survived stop(): $parkedHere")
+  }
+
+  /** A parkable reader that records whether it was closed. */
+  private class ProbeReader extends Iterator[org.apache.spark.sql.catalyst.InternalRow]
+      with AutoCloseable {
+    @volatile var closed = false
+    def hasNext: Boolean = false
+    def next(): org.apache.spark.sql.catalyst.InternalRow = Iterator.empty.next()
+    def close(): Unit = closed = true
+  }
+
+  test("log tail release closes only the named cursors") {
+    val (mine, other) = (new ProbeReader, new ProbeReader)
+    LogTailCache.park("release-probe", 10L, 1L, "s", 4L, mine)
+    LogTailCache.park("release-probe", 10L, 1L, "s", 7L, other)
+    LogTailCache.release(Set(LogTailCache.Cursor("release-probe", 10L, 1L, 4L)))
+    assert(mine.closed && !other.closed)
+    assert(LogTailCache.parkedCursors.filter(_.file == "release-probe") ==
+      Set(LogTailCache.Cursor("release-probe", 10L, 1L, 7L)))
+    LogTailCache.release(Set(LogTailCache.Cursor("release-probe", 10L, 1L, 7L)))
+    assert(other.closed)
+  }
+
+  test("a log stream tracks only the cursors still parked plus its last batch") {
+    val dir = Files.createTempDirectory("logcursors").toString
+    for (i <- 0 until 5) writeShard(dir, s"shard-$i.parquet", i * 100, i * 100 + 50)
+    val stream = new LogMicroBatchStream(dir, new org.apache.spark.sql.types.StructType()
+      .add("id", "long").add("body", "string"), raw = false,
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    // plan one batch per shard, as a stream whose shard set keeps growing
+    // would; nothing executes, so nothing parks between them
+    for (i <- 0 until 5) {
+      val shard = s"shard-$i.parquet"
+      stream.planInputPartitions(LogOffsetV(Map(shard -> 10L)), LogOffsetV(Map(shard -> 20L)))
+      assert(stream.trackedCursors.map(c => (new java.io.File(c.file).getName, c.pos)) ==
+        Set((shard, 20L)))
+    }
+    stream.stop()
   }
 
   test("streaming kv sink: epoch-deterministic files + commit markers (idempotent)") {
